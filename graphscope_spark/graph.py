@@ -239,6 +239,25 @@ class Graph:
             .select("id", F.coalesce("degree", F.lit(0)).alias("degree"))
         )
 
+    def dangling(self) -> DataFrame:
+        """``(id, dangling boolean)``: whether a vertex has no out-edges
+        (no edges at all on an undirected graph) — PageRank's dangling
+        set.  Persisted and cached on the graph like ``adjacency`` (and
+        partitioned by ``id`` when ``num_partitions`` is set), so
+        repeated rank calls skip the degree shuffle; ``unpersist``
+        releases it."""
+        key = ("dangling",)
+        if key not in self._cache:
+            if self.directed:
+                deg = self.out_degrees().withColumnRenamed("out_degree", "d")
+            else:
+                deg = self.degrees().withColumnRenamed("degree", "d")
+            flags = deg.select("id", (F.col("d") == 0).alias("dangling"))
+            if self.num_partitions:
+                flags = flags.repartition(self.num_partitions, "id")
+            self._cache[key] = flags.persist(StorageLevel.MEMORY_AND_DISK)
+        return self._cache[key]
+
     # ------------------------------------------------------- adjacency
     #: auto-salt trigger: if any vertex's degree exceeds this, the
     #: collect_list build routes hub keys through the two-phase salted

@@ -12,12 +12,31 @@ in ``docs/analytical_engine/builtin_algorithms.md:257-271``):
   (ref ``:135-149``); defaults ``alpha=0.85, max_iter=100, tol=1e-6``
   (``python/graphscope/analytical/app/pagerank.py:91-121``).
 
-Spark shape per superstep (SURVEY.md §4.3): one co-partitioned join of
-the cached CSR adjacency with the rank state, one shuffle aggregation
-of exploded contributions by ``dst`` (map-side partial sum = GAE's
-message combining), and ONE driver action that computes the L1 delta
-and the next dangling sum together — three logical steps, a single
-Spark job per superstep.
+Spark shape per superstep (SURVEY.md §4.3): one join of the cached
+CSR adjacency with the rank state, one shuffle aggregation of
+exploded contributions by ``dst`` (map-side partial sum = GAE's
+message combining), the rank update, and one driver aggregate:
+
+- tolerance mode (``tol > 0``, ``_converge``): the state is one
+  per-vertex table ``(id, dangling, rank)``; the update is ``state ⋈
+  contribs`` carrying the old rank along, cut by a lazy
+  ``localCheckpoint``, and ONE aggregate over it fills the cut and
+  returns the L1 delta with the next dangling sum.  Measured: 2 Spark
+  jobs per superstep (a broadcast and that aggregate) plus 3 per call
+  — 15 jobs for the 6 supersteps on the 2,000-repo mined dependency
+  graph, against 25 with a separate L1-delta join.
+- fixed-round mode (``tol <= 0``, ``_fixed_rounds``): the update is
+  ``dangling flags ⋈ contribs``, persisted, cut eagerly every
+  ``lineage_truncate_every`` rounds and lazily on the last round; the
+  aggregate is the dangling sum.  Measured: 25 jobs for 10 rounds on
+  a 300k-edge power-law graph (1 per round, plus the cuts and the
+  broadcasts after them).
+  Its plan is linear in the state, so the lazy per-superstep cut is
+  not used here: on that graph it measured 3.55 s against 3.20 s
+  (medians of 8 alternating 10-round calls in one session, 4 cores).
+
+A call releases every block it caches except those its returned ranks
+read; the adjacency and the dangling flags are cached on the graph.
 """
 
 from __future__ import annotations
@@ -29,7 +48,11 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from graphscope_spark.graph import Graph
-from graphscope_spark.plans.checkpoint import CheckpointManager, maybe_truncate_lineage
+from graphscope_spark.plans.checkpoint import (
+    CheckpointManager,
+    maybe_truncate_lineage,
+    release,
+)
 
 
 def pagerank(
@@ -60,6 +83,8 @@ def pagerank(
     ``tol <= 0`` gives the fixed-round LDBC/Graphalytics variant
     (``grape::PageRankOpt`` with ``delta=0.85, max_round=10`` pinned in
     ``test/run_app.h:342-358``) — exactly ``max_iter`` rounds.
+    ``lineage_truncate_every`` applies to that mode; ``tol > 0`` cuts
+    the lineage every superstep (module docstring).
 
     ``message_combine`` picks the message-reduction strategy:
 
@@ -98,76 +123,28 @@ def personalized_pagerank(
         r'(v) = α·Σ_{u→v} r(u)/outdeg(u)
                 + [v = s]·((1-α) + α·dangling_sum)
 
-    Same superstep shape as global PageRank (cached adjacency join +
-    one combined message shuffle); AQE pinned off for the loop."""
+    Runs on global PageRank's superstep loop for ``tol`` (module
+    docstring); AQE pinned off for the loop."""
     from graphscope_spark.plans.adaptive import superstep_conf
 
     spark = graph.vertices.sparkSession
     with superstep_conf(spark, False):
-        adj = graph.adjacency("out" if graph.directed else "both", cache=True)
-        if graph.directed:
-            deg = graph.out_degrees().withColumnRenamed("out_degree", "deg")
-        else:
-            deg = graph.degrees().withColumnRenamed("degree", "deg")
-        base_v = deg.withColumn("dangling", F.col("deg") == 0)
-        base_v = base_v.persist(StorageLevel.MEMORY_AND_DISK)
-        n = base_v.count()
+        adj, base_v, n = _vertex_base(graph)
         if n == 0:
             return base_v.select("id", F.lit(0.0).alias("rank"))
+        is_source = F.col("id") == int(source)
         state = base_v.select(
-            "id",
-            F.when(F.col("id") == int(source), 1.0).otherwise(0.0).alias("rank"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        dangling_sum = (
-            state.join(base_v.where("dangling").select("id"), "id",
-                       "left_semi")
-            .agg(F.sum("rank")).collect()[0][0] or 0.0
-        ) * alpha
-        for step in range(max_iter):
-            contribs = (
-                adj.join(state.withColumnRenamed("id", "src"), "src")
-                .select(
-                    F.explode("dst_list").alias("id"),
-                    (F.col("rank") / F.col("degree")).alias("c"),
-                )
-                .groupBy("id")
-                .agg(F.sum("c").alias("msum"))
-            )
-            src_mass = (1.0 - alpha) + dangling_sum
-            new_state = (
-                base_v.join(contribs, "id", "left")
-                .select(
-                    "id",
-                    (alpha * F.coalesce("msum", F.lit(0.0))
-                     + F.when(F.col("id") == int(source),
-                              F.lit(src_mass)).otherwise(0.0)).alias("rank"),
-                    "dangling",
-                )
-            )
-            new_state = maybe_truncate_lineage(
-                new_state.persist(StorageLevel.MEMORY_AND_DISK), step, 5
-            )
-            if tol > 0:
-                row = (
-                    new_state.withColumnRenamed("rank", "new_rank")
-                    .join(state.withColumnRenamed("rank", "old_rank"), "id")
-                    .agg(
-                        F.sum(F.abs(F.col("new_rank") - F.col("old_rank"))
-                              ).alias("l1"),
-                        F.sum(F.when(F.col("dangling"), F.col("new_rank"))
-                              .otherwise(0.0)).alias("dsum"),
-                    ).collect()[0]
-                )
-                l1 = row["l1"] or 0.0
-            else:
-                row = new_state.agg(
-                    F.sum(F.when(F.col("dangling"), F.col("rank"))
-                          .otherwise(0.0)).alias("dsum")
-                ).collect()[0]
-                l1 = 0.0
-            dangling_sum = (row["dsum"] or 0.0) * alpha
-            state.unpersist()
-            state = new_state.select("id", "rank")
+            "id", "dangling",
+            F.when(is_source, 1.0).otherwise(0.0).alias("rank"),
+        ).localCheckpoint(eager=False)
+        dangling_sum = alpha * _dangling_mass(state)
+        run = _supersteps(
+            adj, base_v, state, alpha, dangling_sum,
+            lambda d: F.when(is_source, F.lit((1.0 - alpha) + d))
+            .otherwise(0.0),
+            range(max_iter), tol,
+        )
+        for _, state, l1, _ in run:
             if tol > 0 and l1 < tol * n:
                 break
         return state.select("id", "rank")
@@ -226,6 +203,158 @@ def articlerank(
         return state.select("id", "rank")
 
 
+def _vertex_base(graph: Graph) -> tuple[DataFrame, DataFrame, int]:
+    """The cached adjacency messages flow along, the cached per-vertex
+    base table ``(id, dangling)`` and its row count.
+
+    Messages flow src→dst: for the pull-from-in-neighbors digraph
+    semantics edges are kept as-is and aggregated on dst; the degree
+    divisor is the *out*-degree (or the undirected degree)."""
+    adj = graph.adjacency("out" if graph.directed else "both", cache=True)
+    base_v = graph.dangling()
+    return adj, base_v, base_v.count()
+
+
+def _contribs(adj: DataFrame, state: DataFrame,
+              message_combine: str = "map") -> DataFrame:
+    """``(id, msum)``: Σ r(u)/deg(u) over the messages into each
+    vertex, combined per ``message_combine`` (see ``pagerank``)."""
+    msgs = (
+        adj.join(state.select(F.col("id").alias("src"), "rank"), "src")
+        .select(
+            F.explode("dst_list").alias("id"),
+            (F.col("rank") / F.col("degree")).alias("c"),
+        )
+    )
+    if message_combine == "shuffle":
+        n_part = int(
+            state.sparkSession.conf.get("spark.sql.shuffle.partitions")
+        )
+        msgs = msgs.repartition(n_part, "id")
+    return msgs.groupBy("id").agg(F.sum("c").alias("msum"))
+
+
+def _dangling_mass(state: DataFrame) -> float:
+    """Σ r(v) over the dangling vertices of ``state``."""
+    return state.agg(
+        F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(0.0))
+    ).collect()[0][0] or 0.0
+
+
+def _converge(
+    adj: DataFrame,
+    state: DataFrame,
+    alpha: float,
+    dangling_sum: float,
+    teleport,
+    steps: range,
+    message_combine: str = "map",
+):
+    """The convergence superstep over the materialised per-vertex
+    state ``(id, dangling, rank)``; yields ``(step, state, l1,
+    dangling_sum)`` after each superstep.
+
+    The new rank is ``α·msum + teleport(dangling_sum)``, computed as
+    ``state ⋈ contribs`` with the old rank carried along, so ONE
+    aggregate over the new state returns both the L1 delta and the
+    next dangling sum — no second |V|⋈|V| join.  ``state`` appears
+    twice in its own lineage, so it is cut every superstep with a
+    lazy ``localCheckpoint`` that this aggregate fills (no job of its
+    own); the previous cut is released once the new one is filled."""
+    for step in steps:
+        new = (
+            state.join(_contribs(adj, state, message_combine), "id", "left")
+            .select(
+                "id",
+                "dangling",
+                (alpha * F.coalesce("msum", F.lit(0.0))
+                 + teleport(dangling_sum)).alias("rank"),
+                F.col("rank").alias("old_rank"),
+            )
+            .localCheckpoint(eager=False)
+        )
+        row = new.agg(
+            F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("l1"),
+            F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(0.0)
+                  ).alias("dsum"),
+        ).collect()[0]
+        release(state)
+        state, dangling_sum = new, (row["dsum"] or 0.0) * alpha
+        yield step, state, row["l1"] or 0.0, dangling_sum
+
+
+def _fixed_rounds(
+    adj: DataFrame,
+    base_v: DataFrame,
+    state: DataFrame,
+    alpha: float,
+    dangling_sum: float,
+    teleport,
+    steps: range,
+    lineage_truncate_every: int,
+    message_combine: str,
+):
+    """The fixed-round superstep: the new rank is ``base_v ⋈
+    contribs``, persisted, with an eager lineage cut every
+    ``lineage_truncate_every`` supersteps; the one action per
+    superstep is the next dangling sum.  Yields like ``_converge``
+    with an L1 delta of 0.0 (never computed).
+
+    The last superstep is cut lazily instead of persisted (its
+    dangling-sum action fills the cut), so the returned state reads
+    no released block.  Each superstep releases the persisted state
+    before it; a cut is released once a newer cut replaces it."""
+    cut = state
+    for step in steps:
+        new = (
+            base_v.join(_contribs(adj, state, message_combine), "id", "left")
+            .select(
+                "id",
+                (alpha * F.coalesce("msum", F.lit(0.0))
+                 + teleport(dangling_sum)).alias("rank"),
+                "dangling",
+            )
+        )
+        if step == steps[-1]:
+            new, is_cut = new.localCheckpoint(eager=False), True
+        else:
+            persisted = new.persist(StorageLevel.MEMORY_AND_DISK)
+            new = maybe_truncate_lineage(persisted, step,
+                                         lineage_truncate_every)
+            is_cut = new is not persisted
+            if is_cut:
+                release(persisted)
+        dangling_sum = alpha * _dangling_mass(new)
+        if state is not cut:
+            release(state)
+        if is_cut:
+            release(cut)
+            cut = new
+        state = new
+        yield step, state, 0.0, dangling_sum
+
+
+def _supersteps(
+    adj: DataFrame,
+    base_v: DataFrame,
+    state: DataFrame,
+    alpha: float,
+    dangling_sum: float,
+    teleport,
+    steps: range,
+    tol: float,
+    lineage_truncate_every: int = 5,
+    message_combine: str = "map",
+):
+    """The superstep loop for ``tol``: ``_converge`` when it is
+    positive, else ``_fixed_rounds`` (module docstring)."""
+    if tol > 0:
+        return _converge(adj, state, alpha, dangling_sum, teleport, steps,
+                         message_combine)
+    return _fixed_rounds(adj, base_v, state, alpha, dangling_sum, teleport,
+                         steps, lineage_truncate_every, message_combine)
+
+
 def _pagerank_loop(
     graph: Graph,
     alpha: float,
@@ -237,114 +366,45 @@ def _pagerank_loop(
     stats: dict | None = None,
     init_ranks: DataFrame | None = None,
 ) -> DataFrame:
-    direction = "in" if graph.directed else "both"
-    # messages flow src→dst along this adjacency: for the pull-from-
-    # in-neighbors digraph semantics we keep edges as-is and aggregate
-    # on dst; degree divisor is the *out*-degree (or undirected degree).
-    adj = graph.adjacency("out" if graph.directed else "both", cache=True)
-
-    # static per-vertex base table: (id, out_degree, dangling)
-    if graph.directed:
-        deg = graph.out_degrees().withColumnRenamed("out_degree", "deg")
-    else:
-        deg = graph.degrees().withColumnRenamed("degree", "deg")
-    base_v = deg.withColumn("dangling", F.col("deg") == 0)
-    if graph.num_partitions:
-        base_v = base_v.repartition(graph.num_partitions, "id")
-    base_v = base_v.persist(StorageLevel.MEMORY_AND_DISK)
-    n = base_v.count()
+    adj, base_v, n = _vertex_base(graph)
     if n == 0:
         return base_v.select("id", F.lit(0.0).alias("rank"))
 
     # ---- init / resume -------------------------------------------------
     start_step = 0
     if checkpoint is not None and (latest := checkpoint.latest_superstep()) is not None:
-        state = checkpoint.load_state(graph.vertices.sparkSession, latest)
-        state = state.persist(StorageLevel.MEMORY_AND_DISK)
+        init = base_v.join(
+            checkpoint.load_state(graph.vertices.sparkSession, latest), "id"
+        )
         start_step = latest + 1
     elif init_ranks is not None:
         # warm start: carry over prior ranks, default new vertices to
         # 1/N, renormalize so the mass invariant (Σ rank = 1) holds
-        seeded = base_v.select("id").join(
+        seeded = base_v.join(
             init_ranks.select("id", F.col("rank").alias("r0")), "id", "left"
-        ).select("id", F.coalesce("r0", F.lit(1.0 / n)).alias("rank"))
+        ).select("id", "dangling",
+                 F.coalesce("r0", F.lit(1.0 / n)).alias("rank"))
         total = seeded.agg(F.sum("rank")).first()[0] or 1.0
-        state = seeded.select(
-            "id", (F.col("rank") / F.lit(float(total))).alias("rank")
-        )
-        state = state.persist(StorageLevel.MEMORY_AND_DISK)
+        init = seeded.withColumn("rank", F.col("rank") / F.lit(float(total)))
     else:
-        state = base_v.select("id", F.lit(1.0 / n).alias("rank"))
-        state = state.persist(StorageLevel.MEMORY_AND_DISK)
-
+        init = base_v.select("id", "dangling", F.lit(1.0 / n).alias("rank"))
+    # materialised by the dangling-mass action right below
+    state = init.select("id", "dangling", "rank").localCheckpoint(eager=False)
     # dangling_sum = α·Σ_{dangling} r(v) over the current state
-    dangling_sum = (
-        state.join(base_v.where("dangling").select("id"), "id", "left_semi")
-        .agg(F.sum("rank"))
-        .collect()[0][0]
-        or 0.0
-    ) * alpha
+    dangling_sum = alpha * _dangling_mass(state)
 
-    for step in range(start_step, max_iter):
-        t0 = time.time()
-        per_vertex_base = (1.0 - alpha) / n + dangling_sum / n
-        msgs = (
-            adj.join(state.withColumnRenamed("id", "src"), "src")
-            .select(
-                F.explode("dst_list").alias("id"),
-                (F.col("rank") / F.col("degree")).alias("c"),
-            )
-        )
-        if message_combine == "shuffle":
-            n_part = int(
-                graph.vertices.sparkSession.conf.get(
-                    "spark.sql.shuffle.partitions"
-                )
-            )
-            msgs = msgs.repartition(n_part, "id")
-        contribs = msgs.groupBy("id").agg(F.sum("c").alias("msum"))
-        new_state = (
-            base_v.join(contribs, "id", "left")
-            .select(
-                "id",
-                (alpha * F.coalesce("msum", F.lit(0.0)) + F.lit(per_vertex_base)).alias(
-                    "rank"
-                ),
-                "dangling",
-            )
-        )
-        new_state = maybe_truncate_lineage(
-            new_state.persist(StorageLevel.MEMORY_AND_DISK), step, lineage_truncate_every
-        )
-        if tol > 0:
-            # single action: L1 delta + next dangling sum together
-            row = (
-                new_state.withColumnRenamed("rank", "new_rank")
-                .join(state.withColumnRenamed("rank", "old_rank"), "id")
-                .agg(
-                    F.sum(F.abs(F.col("new_rank") - F.col("old_rank"))).alias("l1"),
-                    F.sum(
-                        F.when(F.col("dangling"), F.col("new_rank")).otherwise(0.0)
-                    ).alias("dsum"),
-                )
-                .collect()[0]
-            )
-            l1, dangling_sum = row["l1"] or 0.0, (row["dsum"] or 0.0) * alpha
-        else:
-            # fixed-round mode never reads the L1 delta — the dangling
-            # sum comes from new_state alone, skipping the |V|⋈|V| join
-            row = new_state.agg(
-                F.sum(
-                    F.when(F.col("dangling"), F.col("rank")).otherwise(0.0)
-                ).alias("dsum")
-            ).collect()[0]
-            l1, dangling_sum = 0.0, (row["dsum"] or 0.0) * alpha
-        state.unpersist()
-        state = new_state.select("id", "rank")
+    def teleport(d: float):
+        return F.lit((1.0 - alpha) / n + d / n)
+
+    run = _supersteps(adj, base_v, state, alpha, dangling_sum, teleport,
+                      range(start_step, max_iter), tol,
+                      lineage_truncate_every, message_combine)
+    t0 = time.time()
+    for step, state, l1, dangling_sum in run:
         if checkpoint is not None:
             checkpoint.save(
                 step,
-                state,
+                state.select("id", "rank"),
                 {
                     "l1_delta": float(l1),
                     "dangling_sum": float(dangling_sum),
@@ -356,5 +416,5 @@ def _pagerank_loop(
             stats["final_l1"] = float(l1)
         if tol > 0 and l1 < tol * n:
             break
-
+        t0 = time.time()
     return state.select("id", "rank")

@@ -154,6 +154,20 @@ def maybe_truncate_lineage(df: DataFrame, superstep: int, every: int = 5) -> Dat
     return df
 
 
+def release(df: DataFrame) -> None:
+    """Drop the blocks ``df`` holds: its cache entry if it was
+    persisted, and its RDD if ``df`` is a ``localCheckpoint`` — the
+    cache manager does not track checkpoints, so ``unpersist`` alone
+    leaves their blocks behind.  Nothing that will still be executed
+    may read a released checkpoint: its lineage is gone."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().logical()
+    if plan.nodeName() == "LogicalRDD":
+        # through the context: RDD.unpersist warns on every checkpoint
+        df.sparkSession.sparkContext._jsc.sc().unpersistRDD(
+            plan.rdd().id(), False)
+
+
 class LoopTruncator:
     """Hard lineage truncation for LONG superstep loops (>~12 rounds).
 

@@ -18,9 +18,11 @@ def pagerank_oracle(
     max_iter: int = 100,
     tol: float = 1e-06,
     directed: bool = True,
+    init: dict[int, float] | None = None,
 ) -> dict[int, float]:
     """NetworkX-faithful PageRank per ``apps/pagerank/
-    pagerank_networkx.h:62-161`` (see operators/pagerank.py)."""
+    pagerank_networkx.h:62-161`` (see operators/pagerank.py), starting
+    from ``init`` when given (a warm start), else from ``1/N``."""
     if not directed:
         es = set()
         for u, v in edges:
@@ -35,7 +37,7 @@ def pagerank_oracle(
     for u, v in edges:
         out_nbrs[u].append(v)
     outdeg = {v: len(out_nbrs[v]) for v in vertices}
-    r = {v: 1.0 / n for v in vertices}
+    r = dict(init) if init is not None else {v: 1.0 / n for v in vertices}
     dangling = [v for v in vertices if outdeg[v] == 0]
     for _ in range(max_iter):
         dsum = alpha * sum(r[v] for v in dangling)

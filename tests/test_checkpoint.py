@@ -38,6 +38,26 @@ def test_pagerank_resume_equivalence(spark, tmp_path):
     assert "l1_delta" in m.columns
 
 
+def test_pagerank_resume_equivalence_converging(spark, tmp_path):
+    g = make_graph(spark, VS, ES)
+    stats: dict = {}
+    want = df_to_dict(pagerank(g, tol=1e-6, stats=stats))
+    rounds = stats["rounds"]
+    assert rounds > 3
+
+    ck = CheckpointManager(str(tmp_path), "pr_tol")
+    pagerank(g, max_iter=3, tol=1e-6, checkpoint=ck)
+    assert ck.latest_superstep() == 2
+    got = df_to_dict(pagerank(g, tol=1e-6, checkpoint=ck, stats=stats))
+    assert stats["rounds"] == rounds
+    assert set(got) == set(want)
+    for v in VS:
+        assert math.isclose(got[v], want[v], abs_tol=1e-12), v
+    m = ck.load_metrics(spark).orderBy("superstep").collect()
+    assert len(m) == rounds
+    assert m[-1]["l1_delta"] < 1e-6 * len(VS) <= m[-2]["l1_delta"]
+
+
 def test_wcc_resume_equivalence(spark, tmp_path):
     g = make_graph(spark, VS, ES)
     want = df_to_dict(wcc(g))

@@ -6,9 +6,11 @@ want at 100 TB.  Checks, per representative query:
 - small dimension joins are broadcast (no full shuffle of nation);
 - aggregations are two-phase (partial_ before the exchange = map-side
   combine, the engine's analog of GAE message combining);
-- the pagerank superstep contains exactly one wide shuffle of
-  messages (Exchange on the groupBy key), with the adjacency side
-  reused from cache (InMemoryTableScan).
+- every superstep a real ``pagerank`` call executes, fixed-round and
+  tolerance mode, contains exactly one wide shuffle of messages
+  (Exchange on the groupBy key), with the adjacency side reused from
+  cache (InMemoryTableScan); in tolerance mode the L1 delta comes
+  from one aggregate over the new state, with no join.
 
 Run: python tools/explain_audit.py [sf_dir]
 """
@@ -26,6 +28,7 @@ from graphscope_spark.entry import (  # noqa: E402
     part_graph,
     q_rel_join_topk,
 )
+from graphscope_spark.operators.pagerank import pagerank  # noqa: E402
 from graphscope_spark.session import get_spark  # noqa: E402
 
 CHECKS: list[tuple[str, bool, str]] = []
@@ -41,6 +44,68 @@ def plan_of(df) -> str:
     return jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
+
+
+def executed_plans(spark, fn) -> list[str]:
+    """Physical plans of the SQL executions ``fn`` runs, as the SQL
+    status store recorded them, in order — in ``simple`` explain mode:
+    one indented line per node, its arguments inline."""
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        seq = store.executionsList()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    seen = max((e.executionId() for e in executions()), default=-1)
+    mode = spark.conf.get("spark.sql.ui.explainMode")
+    spark.conf.set("spark.sql.ui.explainMode", "simple")
+    try:
+        fn()
+    finally:
+        spark.conf.set("spark.sql.ui.explainMode", mode)
+    return [e.physicalPlanDescription() for e in executions()
+            if e.executionId() > seen]
+
+
+def superstep_shape(plan: str) -> dict | None:
+    """The shape of the join that builds a PageRank superstep's new
+    state — the nearest join above the message explode — or ``None``
+    when ``plan`` explodes no adjacency list.  The build plans of
+    cached relations nested in it (adjacency, dangling flags) were
+    filled before the superstep and do not count.  A split at the
+    first ``InMemoryRelation`` does not do: a fixed-round superstep
+    runs inside the build plan of the state it persists."""
+    nodes = [(len(line) - len(line.lstrip(" :+-")), line.lstrip(" :+-"))
+             for line in plan.splitlines()[1:]]
+    gen = next((i for i, (_, node) in enumerate(nodes)
+                if "Generate explode(dst_list" in node), None)
+    if gen is None:
+        return None
+    depth = nodes[gen][0]
+    for join in range(gen - 1, -1, -1):
+        if nodes[join][0] < depth:
+            depth = nodes[join][0]
+            if "Join" in nodes[join][1]:
+                break
+    else:
+        return None
+    live, skip = [], None
+    for d, node in nodes[join + 1:]:
+        if d <= depth:
+            break
+        if skip is not None and d > skip:
+            continue
+        skip = d if node.startswith("InMemoryRelation") else None
+        live.append(node)
+    return {
+        "adjacency_cached": any(node.startswith("InMemoryTableScan")
+                                and "dst_list" in node for node in live),
+        "partial_sum": any("partial_sum" in node for node in live),
+        "shuffles": sum(node.startswith("Exchange hashpartitioning")
+                        for node in live),
+    }
 
 
 def main() -> None:
@@ -68,34 +133,34 @@ def main() -> None:
     has_partial = "partial_sum" in p
     check("agg: map-side combine (partial_sum)", has_partial, "")
 
-    # 4. the pagerank superstep shape: cached adjacency + single
-    #    message shuffle + partial aggregation of contributions
+    # 4. the pagerank superstep shape, audited on the plans a real
+    #    call executes, in both modes: cached adjacency + a single
+    #    message shuffle with partial aggregation; in tolerance mode
+    #    the L1 delta and dangling sum come from one aggregate over
+    #    the new state, with no second |V|⋈|V| join
     g = part_graph(spark, sf_dir)
-    adj = g.adjacency("out", cache=True)
-    adj.count()  # materialize cache
-    # state as it exists inside the loop: a materialized per-vertex df
-    # (persisted/localCheckpointed each round), not a re-derivation
-    state = g.vertices.select("id", F.lit(1.0).alias("rank")).localCheckpoint(
-        eager=True
-    )
-    contribs = (
-        adj.join(state.withColumnRenamed("id", "src"), "src")
-        .select(F.explode("dst_list").alias("id"),
-                (F.col("rank") / F.col("degree")).alias("c"))
-        .groupBy("id").agg(F.sum("c").alias("msum"))
-    )
-    p = plan_of(contribs)
-    check("superstep: adjacency read from cache",
-          "InMemoryTableScan" in p or "TableCacheQueryStage" in p, "")
-    check("superstep: partial_sum combine before shuffle",
-          "partial_sum" in p, "")
-    # count only live exchanges: the cached relation's stored build
-    # plan (everything from InMemoryRelation down) never re-executes
-    live = p.split("InMemoryRelation")[0]
-    n_live_exchanges = live.count("Exchange")
-    check("superstep: exactly one message shuffle",
-          n_live_exchanges <= 1,
-          f"live Exchange count={n_live_exchanges}")
+    for tol in (0.0, 1e-6):
+        stats: dict = {}
+        plans = executed_plans(spark, lambda: pagerank(
+            g, max_iter=3, tol=tol, stats=stats).collect())
+        mode = "tol" if tol > 0 else "fixed"
+        shapes = [s for s in map(superstep_shape, plans) if s]
+        check(f"superstep[{mode}]: one plan audited per superstep",
+              len(shapes) >= stats["rounds"],
+              f"{len(shapes)} plans, {stats['rounds']} supersteps")
+        check(f"superstep[{mode}]: adjacency read from cache",
+              bool(shapes) and all(s["adjacency_cached"] for s in shapes))
+        check(f"superstep[{mode}]: partial_sum combine before shuffle",
+              bool(shapes) and all(s["partial_sum"] for s in shapes))
+        check(f"superstep[{mode}]: exactly one message shuffle",
+              bool(shapes) and all(s["shuffles"] == 1 for s in shapes),
+              f"live shuffles per superstep={[s['shuffles'] for s in shapes]}")
+        if tol > 0:
+            deltas = [p for p in plans if "old_rank" in p and "sum(abs(" in p]
+            check("superstep[tol]: L1 delta from one aggregate, no join",
+                  len(deltas) == stats["rounds"]
+                  and not any("Join" in p for p in deltas),
+                  f"{len(deltas)} delta aggregates")
 
     # 5. the registered embedding near-dup is the LSH path: candidate
     #    generation must be bucket-equality joins — a CartesianProduct
